@@ -15,9 +15,7 @@ formulation would be O(n·m) per key; this is O((n+m) log(n+m)) per
 partition (the window sort), and the sort is spillable.
 
 With NO ``by`` keys a keyless window would collapse to one task, so the
-global case range-buckets rows by time instead and carries across
-bucket boundaries with a tiny driver-collected per-bucket summary — see
-:func:`_bucketed_global_fill`.
+global case range-buckets rows by time instead (:mod:`.range_buckets`).
 
 Right rows sort BEFORE left rows at equal timestamps, so an exact
 timestamp tie matches (``t_right <= t_left``), exactly like DuckDB's
@@ -30,102 +28,61 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..session import driver_row, driver_rows
 from pyspark.sql import types as T
+
+from .range_buckets import BUCKET, attach, bucketize, summarize
 
 _TAG = "__dfi_asof_tag"
 _CARRY = "__dfi_asof_carry"
 _RTIME = "__dfi_asof_rtime"
-_BUCKET = "__dfi_asof_bucket"
-_TSL = "__dfi_asof_tsl"
 
 
 def _bucketed_global_fill(unioned, left_cols, left_on, direction):
     """Scalable carry-forward for the GLOBAL (no ``by`` keys) as-of case.
 
     ``Window.partitionBy()`` with no keys funnels the whole dataset
-    through one task, so instead: range-bucket rows by time (integer
-    bucket ids from one cheap min/max agg), run the carry window inside
-    each bucket in parallel, and fix bucket boundaries by prefix-carrying
-    each bucket's last right row across buckets.  The per-bucket summary
-    is O(buckets) rows, computed with map-side partial aggregation and
-    collected to the driver, so the distributed plan contains no
-    single-partition exchange at all — two tiny eager jobs (min/max +
-    bucket summary) buy a fully parallel main pass."""
-    spark = unioned.sparkSession
+    through one task, so instead: range-bucket rows by time (see
+    :mod:`.range_buckets`), run the carry window inside each bucket in
+    parallel, and fix bucket boundaries by prefix-carrying each bucket's
+    last right row across buckets."""
     asc = direction == "backward"
-    bounds = driver_row(
-        unioned.agg(
-            F.min(F.col(left_on).cast("long")).alias("lo"),
-            F.max(F.col(left_on).cast("long")).alias("hi"),
-        )
+    u = bucketize(unioned, F.col(left_on))
+    # per-bucket boundary: the last right row of each bucket in scan
+    # order (max/min rtime; payload via max_by — ties at equal rtime are
+    # resolved arbitrarily, same contract as the window carry itself)
+    summ = summarize(
+        u,
+        F.max_by(F.col(_CARRY), F.col(_RTIME) if asc else -F.col(_RTIME)).alias("bc"),
+        (F.max(_RTIME) if asc else F.min(_RTIME)).alias("br"),
     )
-    lo, hi = bounds["lo"], bounds["hi"]
+    inc_rows, last = [], (None, None)
+    for r in summ if asc else reversed(summ):
+        inc_rows.append((r[BUCKET], *last))
+        if r["br"] is not None:
+            last = (r["bc"], r["br"])
+
     order = [
         F.col(left_on).asc() if asc else F.col(left_on).desc(),
         F.col(_TAG).asc(),
     ]
-    if lo is None:  # empty input: nothing to partition
-        w = Window.orderBy(*order).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        return unioned.select(
-            *[F.col(c) for c in left_cols],
-            F.col(_TAG),
-            F.last(_CARRY, ignorenulls=True).over(w).alias(_CARRY),
-            F.last(_RTIME, ignorenulls=True).over(w).alias(_RTIME),
-        ).filter(F.col(_TAG) == 1)
-
-    nb = max(int(spark.sparkContext.defaultParallelism) * 4, 32)
-    width = max((int(hi) - int(lo)) // nb + 1, 1)
-    # integer bucket id — ns magnitudes stay in long arithmetic (never
-    # route epoch-ns through doubles: 2^53 < 1.7e18)
-    u = unioned.withColumn(
-        _TSL, F.col(left_on).cast("long") - F.lit(int(lo))
-    ).withColumn(_BUCKET, F.expr(f"{_TSL} DIV {width}"))
-
-    # per-bucket boundary: the last right row of each bucket in scan
-    # order (max/min rtime; payload via max_by — ties at equal rtime are
-    # resolved arbitrarily, same contract as the window carry itself)
-    ordv = F.col(_RTIME) if asc else -F.col(_RTIME)
-    summ = driver_rows(
-        u.groupBy(_BUCKET).agg(
-            F.max_by(F.col(_CARRY), ordv).alias("bc"),
-            (F.max(_RTIME) if asc else F.min(_RTIME)).alias("br"),
-        )
-    )
-    inc_rows, last_c, last_r = [], None, None
-    for r in sorted(summ, key=lambda r: r[_BUCKET], reverse=not asc):
-        inc_rows.append((r[_BUCKET], last_c, last_r))
-        if r["br"] is not None:
-            last_c, last_r = r["bc"], r["br"]
-    carry_type = unioned.schema[_CARRY].dataType
-    incoming = spark.createDataFrame(
-        inc_rows,
-        schema=(
-            f"{_BUCKET} long, __inc_c {carry_type.simpleString()}, __inc_r long"
-        ),
-    )
-
-    w1 = Window.partitionBy(_BUCKET).orderBy(*order).rowsBetween(
+    w = Window.partitionBy(BUCKET).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     within = u.select(
         *[F.col(c) for c in left_cols],
         F.col(_TAG),
-        F.col(_BUCKET),
-        F.last(_CARRY, ignorenulls=True).over(w1).alias(_CARRY),
-        F.last(_RTIME, ignorenulls=True).over(w1).alias(_RTIME),
+        F.col(BUCKET),
+        F.last(_CARRY, ignorenulls=True).over(w).alias(_CARRY),
+        F.last(_RTIME, ignorenulls=True).over(w).alias(_RTIME),
     ).filter(F.col(_TAG) == 1)
-    return (
-        within.join(F.broadcast(incoming), _BUCKET, "left")
-        .select(
-            *[F.col(c) for c in left_cols],
-            F.col(_TAG),
-            F.coalesce(F.col(_CARRY), F.col("__inc_c")).alias(_CARRY),
-            F.coalesce(F.col(_RTIME), F.col("__inc_r")).alias(_RTIME),
-        )
+    carry_type = unioned.schema[_CARRY].dataType
+    return attach(
+        within, inc_rows, {"__inc_c": carry_type, "__inc_r": "long"}
+    ).select(
+        *[F.col(c) for c in left_cols],
+        F.col(_TAG),
+        F.coalesce(F.col(_CARRY), F.col("__inc_c")).alias(_CARRY),
+        F.coalesce(F.col(_RTIME), F.col("__inc_r")).alias(_RTIME),
     )
 
 
@@ -133,92 +90,49 @@ def _bucketed_global_fill_nearest(unioned, left_cols, left_on):
     """Keyless NEAREST: the same range-bucket structure as
     :func:`_bucketed_global_fill`, but carrying BOTH directions in one
     ascending pass — backward via last-over-preceding, forward via
-    first-over-following — with two O(buckets) boundary maps (prefix of
-    each bucket's last right row, suffix of each bucket's first right
-    row) built from ONE collected per-bucket summary."""
-    spark = unioned.sparkSession
-    bounds = driver_row(
-        unioned.agg(
-            F.min(F.col(left_on).cast("long")).alias("lo"),
-            F.max(F.col(left_on).cast("long")).alias("hi"),
-        )
+    first-over-following — with two boundary maps (prefix of each
+    bucket's last right row, suffix of each bucket's first right row)
+    folded from ONE per-bucket summary."""
+    u = bucketize(unioned, F.col(left_on))
+    summ = summarize(
+        u,
+        F.max_by(F.col(_CARRY), F.col(_RTIME)).alias("lc"),
+        F.max(_RTIME).alias("lr"),
+        F.min_by(F.col(_CARRY), F.col(_RTIME)).alias("fc"),
+        F.min(_RTIME).alias("fr"),
     )
-    lo, hi = bounds["lo"], bounds["hi"]
-    order = [F.col(left_on).asc(), F.col(_TAG).asc()]
-    sel_b = lambda w: [  # noqa: E731
-        F.last(_CARRY, ignorenulls=True).over(w).alias("__bc"),
-        F.last(_RTIME, ignorenulls=True).over(w).alias("__br"),
-    ]
-    sel_f = lambda w: [  # noqa: E731
-        F.first(_CARRY, ignorenulls=True).over(w).alias("__fc"),
-        F.first(_RTIME, ignorenulls=True).over(w).alias("__fr"),
-    ]
-    if lo is None:  # empty input — single window is fine
-        wb = Window.orderBy(*order).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        wf = Window.orderBy(*order).rowsBetween(
-            Window.currentRow, Window.unboundedFollowing
-        )
-        return unioned.select(
-            *[F.col(c) for c in left_cols], F.col(_TAG),
-            *sel_b(wb), *sel_f(wf),
-        ).filter(F.col(_TAG) == 1)
-
-    nb = max(int(spark.sparkContext.defaultParallelism) * 4, 32)
-    width = max((int(hi) - int(lo)) // nb + 1, 1)
-    u = unioned.withColumn(
-        _TSL, F.col(left_on).cast("long") - F.lit(int(lo))
-    ).withColumn(_BUCKET, F.expr(f"{_TSL} DIV {width}"))
-
-    summ = driver_rows(
-        u.groupBy(_BUCKET).agg(
-            F.max_by(F.col(_CARRY), F.col(_RTIME)).alias("lc"),
-            F.max(_RTIME).alias("lr"),
-            F.min_by(F.col(_CARRY), F.col(_RTIME)).alias("fc"),
-            F.min(_RTIME).alias("fr"),
-        )
-    )
-    carry_type = unioned.schema[_CARRY].dataType
-    rows_sorted = sorted(summ, key=lambda r: r[_BUCKET])
-    inc_rows, last_c, last_r = {}, None, None
-    for r in rows_sorted:  # prefix: last right row BEFORE this bucket
-        inc_rows[r[_BUCKET]] = (last_c, last_r)
+    inc, last = {}, (None, None)
+    for r in summ:  # prefix: last right row BEFORE this bucket
+        inc[r[BUCKET]] = last
         if r["lr"] is not None:
-            last_c, last_r = r["lc"], r["lr"]
-    nxt_rows, next_c, next_r = {}, None, None
-    for r in reversed(rows_sorted):  # suffix: first right row AFTER
-        nxt_rows[r[_BUCKET]] = (next_c, next_r)
+            last = (r["lc"], r["lr"])
+    rows, nxt = [], (None, None)
+    for r in reversed(summ):  # suffix: first right row AFTER
+        rows.append((r[BUCKET], *inc[r[BUCKET]], *nxt))
         if r["fr"] is not None:
-            next_c, next_r = r["fc"], r["fr"]
-    boundary = spark.createDataFrame(
-        [
-            (b, *inc_rows[b], *nxt_rows[b])
-            for b in inc_rows
-        ],
-        schema=(
-            f"{_BUCKET} long, __inc_c {carry_type.simpleString()}, __inc_r long,"
-            f" __nxt_c {carry_type.simpleString()}, __nxt_r long"
-        ),
-    )
+            nxt = (r["fc"], r["fr"])
 
-    wb = Window.partitionBy(_BUCKET).orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wf = Window.partitionBy(_BUCKET).orderBy(*order).rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
+    w = Window.partitionBy(BUCKET).orderBy(F.col(left_on).asc(), F.col(_TAG).asc())
+    wb = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    wf = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     within = u.select(
-        *[F.col(c) for c in left_cols], F.col(_TAG), F.col(_BUCKET),
-        *sel_b(wb), *sel_f(wf),
-    ).filter(F.col(_TAG) == 1)
-    return within.join(F.broadcast(boundary), _BUCKET, "left").select(
         *[F.col(c) for c in left_cols],
         F.col(_TAG),
-        F.coalesce(F.col("__bc"), F.col("__inc_c")).alias("__bc"),
-        F.coalesce(F.col("__br"), F.col("__inc_r")).alias("__br"),
-        F.coalesce(F.col("__fc"), F.col("__nxt_c")).alias("__fc"),
-        F.coalesce(F.col("__fr"), F.col("__nxt_r")).alias("__fr"),
+        F.col(BUCKET),
+        F.last(_CARRY, ignorenulls=True).over(wb).alias("__bc"),
+        F.last(_RTIME, ignorenulls=True).over(wb).alias("__br"),
+        F.first(_CARRY, ignorenulls=True).over(wf).alias("__fc"),
+        F.first(_RTIME, ignorenulls=True).over(wf).alias("__fr"),
+    ).filter(F.col(_TAG) == 1)
+    ct = unioned.schema[_CARRY].dataType
+    cols = {"__inc_c": ct, "__inc_r": "long", "__nxt_c": ct, "__nxt_r": "long"}
+    return attach(within, rows, cols).select(
+        *[F.col(c) for c in left_cols],
+        F.col(_TAG),
+        *[
+            F.coalesce(F.col(c), F.col(b)).alias(c)
+            for c, b in zip(("__bc", "__br", "__fc", "__fr"), cols)
+        ],
     )
 
 
@@ -402,7 +316,10 @@ def asof_join(
         # range-bucketed two-pass carry instead (parallel at any scale)
         filled = _bucketed_global_fill(unioned, left.columns, left_on, direction)
 
-    matched = F.col(_RTIME).isNotNull()
+    # a NULL left time matches nothing (as in SQL ASOF JOIN); the keyed
+    # windows sort it beside the NULL-time right rows, whose carried
+    # payload would otherwise pair with another row's time
+    matched = F.col(_RTIME).isNotNull() & F.col(left_on).isNotNull()
     if tolerance is not None:
         if direction == "backward":
             gap = F.col(left_on).cast("long") - F.col(_RTIME)

@@ -13,10 +13,9 @@ Execution is the classic gaps-and-islands rewrite, Spark-first:
   window finds island breaks, a running sum numbers islands, and a
   groupBy collapses them.  O((n log n)/partition), spillable, no UDFs.
 - global (``by=None``): a keyless window would collapse to one task, so
-  rows are range-bucketed by start time (same pattern as the keyless
-  as-of join) and island breaks/numbers are corrected across buckets
-  with two O(buckets) driver-collected summaries broadcast back — the
-  distributed plan contains no single-partition exchange.
+  rows are range-bucketed by start time and island breaks/numbers are
+  carried across buckets (:mod:`.range_buckets`) — the distributed plan
+  contains no single-partition exchange.
 """
 
 from __future__ import annotations
@@ -26,7 +25,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import driver_row, driver_rows
+from ..session import driver_row
 from ..functions.spans import (
     make_span,
     py_endpoint_to_ordinal,
@@ -34,8 +33,8 @@ from ..functions.spans import (
     span_from_ordinal,
     span_to_ordinal,
 )
+from .range_buckets import BUCKET, attach, bucketize, summarize
 
-_B = "__dfi_mrg_bucket"
 _PMAX = "__dfi_mrg_pmax"
 _BRK = "__dfi_mrg_brk"
 _ISL = "__dfi_mrg_isl"
@@ -126,41 +125,25 @@ def _merge_spans_global(
     Three tiny driver jobs (min/max, per-bucket max-stop, per-bucket
     corrected break counts) buy a fully parallel main pass; every
     summary is O(buckets)."""
-    spark = df.sparkSession
     start = F.col(spancol).getField("start")
     stop = F.col(spancol).getField("stop")
-    bounds = driver_row(df.agg(
-        F.min(start.cast("long")).alias("lo"), F.max(start.cast("long")).alias("hi")
-    ))
-    lo, hi = bounds["lo"], bounds["hi"]
-    if lo is None:
-        return df.select(
-            F.col(spancol), F.lit(0).cast("long").alias("n_spans")
-        ).limit(0)
-    nb = max(int(spark.sparkContext.defaultParallelism) * 4, 32)
-    width = max((int(hi) - int(lo)) // nb + 1, 1)
-    u = df.select(F.col(spancol)).withColumn(
-        _B, F.expr(f"CAST(({spancol}.start - {lo}) DIV {width} AS LONG)")
-    )
+    u = bucketize(df.select(F.col(spancol)), start)
 
-    # pass 1: incoming running-max(stop) per bucket, from the driver
-    perb = driver_rows(u.groupBy(_B).agg(F.max(stop).alias("mx")))
+    # pass 1: incoming running-max(stop) per bucket
     inc_rows, running = [], None
-    for r in sorted(perb, key=lambda r: r[_B]):
-        inc_rows.append((r[_B], running))
+    for r in summarize(u, F.max(stop).alias("mx")):
+        inc_rows.append((r[BUCKET], running))
         running = r["mx"] if running is None else max(running, r["mx"])
-    inc = spark.createDataFrame(inc_rows, f"{_B} long, __inc_max long")
 
-    w = Window.partitionBy(_B).orderBy(start, stop)
+    w = Window.partitionBy(BUCKET).orderBy(start, stop)
     local_pmax = F.max(stop).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    u2 = u.join(F.broadcast(inc), _B, "left")
     eff_pmax = F.greatest(  # greatest skips nulls; all-null stays null
         local_pmax, F.col("__inc_max")
     )
     brk = _break_expr(start, eff_pmax, merge_touching)
-    flagged = u2.select(
+    flagged = attach(u, inc_rows, {"__inc_max": "long"}).select(
         F.col(spancol),
-        F.col(_B),
+        F.col(BUCKET),
         brk.alias(_BRK),
         F.sum(brk)
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -169,18 +152,13 @@ def _merge_spans_global(
     flagged = flagged.persist()
 
     # pass 2: island-number offsets = prefix sums of per-bucket breaks
-    cnts = {
-        r[_B]: r["c"]
-        for r in driver_rows(flagged.groupBy(_B).agg(F.sum(_BRK).alias("c")))
-    }
     off_rows, acc = [], 0
-    for b in sorted(cnts):
-        off_rows.append((b, acc))
-        acc += int(cnts[b] or 0)
-    offs = spark.createDataFrame(off_rows, f"{_B} long, __off long")
+    for r in summarize(flagged, F.sum(_BRK).alias("c")):
+        off_rows.append((r[BUCKET], acc))
+        acc += int(r["c"] or 0)
 
-    merged = (
-        flagged.join(F.broadcast(offs), _B)
+    return (
+        attach(flagged, off_rows, {"__off": "long"})
         .withColumn(_ISL, F.col(_ISL) + F.col("__off"))
         .groupBy(_ISL)
         .agg(
@@ -190,7 +168,6 @@ def _merge_spans_global(
         )
         .select(make_span(F.col("__s"), F.col("__e")).alias(spancol), "n_spans")
     )
-    return merged
 
 
 def span_gaps(
@@ -227,34 +204,16 @@ def span_gaps(
 
 
 def _global_next_start(merged: DataFrame, spancol: str) -> DataFrame:
-    spark = merged.sparkSession
     start = F.col(spancol).getField("start")
-    bounds = driver_row(merged.agg(
-        F.min(start.cast("long")).alias("lo"), F.max(start.cast("long")).alias("hi")
-    ))
-    lo, hi = bounds["lo"], bounds["hi"]
-    if lo is None:
-        return merged.select(
-            F.col(spancol), F.lit(None).cast("long").alias("__next")
-        ).limit(0)
-    nb = max(int(spark.sparkContext.defaultParallelism) * 4, 32)
-    width = max((int(hi) - int(lo)) // nb + 1, 1)
-    u = merged.withColumn(
-        _B, F.expr(f"CAST(({spancol}.start - {lo}) DIV {width} AS LONG)")
-    )
-    firsts = driver_rows(u.groupBy(_B).agg(F.min(start).alias("mn")))
+    u = bucketize(merged, start)
     nxt_rows, nxt = [], None
-    for r in sorted(firsts, key=lambda r: r[_B], reverse=True):
-        nxt_rows.append((r[_B], nxt))
+    for r in reversed(summarize(u, F.min(start).alias("mn"))):
+        nxt_rows.append((r[BUCKET], nxt))
         nxt = r["mn"]
-    nb_df = spark.createDataFrame(nxt_rows, f"{_B} long, __bnext long")
-    w = Window.partitionBy(_B).orderBy(start)
-    return (
-        u.join(F.broadcast(nb_df), _B, "left")
-        .select(
-            F.col(spancol),
-            F.coalesce(F.lead(start).over(w), F.col("__bnext")).alias("__next"),
-        )
+    w = Window.partitionBy(BUCKET).orderBy(start)
+    return attach(u, nxt_rows, {"__bnext": "long"}).select(
+        F.col(spancol),
+        F.coalesce(F.lead(start).over(w), F.col("__bnext")).alias("__next"),
     )
 
 
@@ -274,9 +233,7 @@ def overlap_profile(
     a per-key running sum turns deltas into depths, ``lead`` into
     segments.  Keyed: one shuffle pattern on the keys.  Global: the
     keyless running sum would collapse to one task, so positions are
-    range-bucketed and both the running depth and each bucket's last
-    ``lead`` are corrected from two O(buckets) driver summaries — the
-    same structure as the global :func:`merge_spans`.
+    range-bucketed (:mod:`.range_buckets`).
     """
     df, _dom = _to_ordinal(df, spancol)
     if _dom is not None:
@@ -320,56 +277,33 @@ def overlap_profile(
 
 
 def _global_running_profile(agg: DataFrame) -> DataFrame:
-    """Keyless running sum + lead over (pos, delta) rows without a
-    single-partition exchange: range-bucket by pos, run the window per
-    bucket, then correct depths by the prefix sum of per-bucket delta
-    totals and each bucket's last ``lead`` by the next bucket's first
-    pos (two O(buckets) driver-collected summaries, broadcast back)."""
-    spark = agg.sparkSession
-    bounds = driver_row(agg.agg(
-        F.min("__pos").alias("lo"), F.max("__pos").alias("hi")
-    ))
-    lo, hi = bounds["lo"], bounds["hi"]
-    if lo is None:
-        return agg.select(
-            "__pos",
-            F.lit(None).cast("long").alias("__depth"),
-            F.lit(None).cast("long").alias("__nxt"),
-        ).limit(0)
-    nb = max(int(spark.sparkContext.defaultParallelism) * 4, 32)
-    width = max((int(hi) - int(lo)) // nb + 1, 1)
-    u = agg.withColumn(_B, F.expr(f"CAST((__pos - {lo}) DIV {width} AS LONG)"))
-
-    summ = driver_rows(
-        u.groupBy(_B).agg(
-            F.sum("__delta").alias("dsum"), F.min("__pos").alias("first_pos")
-        )
+    """Keyless running sum + lead over (pos, delta) rows: per-bucket
+    window, corrected by the prefix sum of per-bucket delta totals and,
+    for each bucket's last ``lead``, the next bucket's first pos — both
+    folded from ONE O(buckets) summary."""
+    u = bucketize(agg, F.col("__pos"))
+    summ = summarize(
+        u, F.sum("__delta").alias("dsum"), F.min("__pos").alias("first_pos")
     )
-    off_rows, nxt_rows, acc, nxt = [], [], 0, None
-    ordered = sorted(summ, key=lambda r: r[_B])
-    for r in ordered:
-        off_rows.append((r[_B], acc))
+    offs, acc = {}, 0
+    for r in summ:
+        offs[r[BUCKET]] = acc
         acc += int(r["dsum"] or 0)
-    for r in reversed(ordered):
-        nxt_rows.append((r[_B], nxt))
+    rows, nxt = [], None
+    for r in reversed(summ):
+        rows.append((r[BUCKET], offs[r[BUCKET]], nxt))
         nxt = r["first_pos"]
-    offs = spark.createDataFrame(off_rows, f"{_B} long, __off long")
-    nxts = spark.createDataFrame(nxt_rows, f"{_B} long, __bnext long")
 
-    w = Window.partitionBy(_B).orderBy("__pos")
-    return (
-        u.join(F.broadcast(offs), _B)
-        .join(F.broadcast(nxts), _B, "left")
-        .select(
-            "__pos",
-            (
-                F.sum("__delta").over(
-                    w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                )
-                + F.col("__off")
-            ).alias("__depth"),
-            F.coalesce(F.lead("__pos").over(w), F.col("__bnext")).alias("__nxt"),
-        )
+    w = Window.partitionBy(BUCKET).orderBy("__pos")
+    return attach(u, rows, {"__off": "long", "__bnext": "long"}).select(
+        "__pos",
+        (
+            F.sum("__delta").over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            + F.col("__off")
+        ).alias("__depth"),
+        F.coalesce(F.lead("__pos").over(w), F.col("__bnext")).alias("__nxt"),
     )
 
 

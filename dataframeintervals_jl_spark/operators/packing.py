@@ -10,12 +10,8 @@ replays it exactly (the DuckDB oracle is a window cumsum).
 Scale design: the global exclusive running sum is the whole problem —
 ``Window.orderBy`` without a partition key collapses to ONE task.  We
 never do that: the keyed form windows per key (one shuffle on the
-keys), and the global form range-buckets the order column, windows per
-bucket, and corrects each bucket by the prefix sum of per-bucket token
-totals — an O(buckets) driver summary broadcast back, the same
-structure as the global operators in ``operators/coalesce.py``.  At
-100 TB the bucket summary stays tiny (4×parallelism rows) while every
-heavy stage remains fully parallel.
+keys), and the global form range-buckets the order column
+(:mod:`.range_buckets`), so every heavy stage remains fully parallel.
 
 This extends the engine beyond the reference surface (the reference,
 /root/reference/src/DataFrameIntervals.jl, is interval-join only);
@@ -30,9 +26,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import driver_row, driver_rows
-
-_B = "__pack_bucket"
+from .range_buckets import BUCKET, attach, bucketize, summarize
 
 
 def _by_cols(by) -> list:
@@ -90,37 +84,21 @@ def _global_exclusive_cumsum(
     df: DataFrame, tok, order_col: str
 ) -> DataFrame:
     """Keyless exclusive running sum of ``tok`` in ``order_col`` order
-    without a single-partition exchange: range-bucket the order column,
-    cumsum per bucket, add the prefix sum of per-bucket totals
-    (O(buckets) driver-collected, broadcast back)."""
-    spark = df.sparkSession
-    oc = F.col(order_col).cast("long")
-    bounds = driver_row(df.agg(F.min(oc).alias("lo"), F.max(oc).alias("hi")))
-    lo, hi = bounds["lo"], bounds["hi"]
-    if lo is None:
-        return df.select("*", F.lit(0).cast("long").alias("__tok_start")).limit(0)
-    nb = max(int(spark.sparkContext.defaultParallelism) * 4, 32)
-    width = max((int(hi) - int(lo)) // nb + 1, 1)
-    u = df.withColumn(_B, F.expr(f"CAST(({order_col} - {lo}) DIV {width} AS LONG)"))
-
-    summ = driver_rows(u.groupBy(_B).agg(F.sum(tok).alias("tsum")))
+    without a single-partition exchange: cumsum per range bucket, plus
+    the prefix sum of per-bucket totals (:mod:`.range_buckets`)."""
+    u = bucketize(df, F.col(order_col))
     off_rows, acc = [], 0
-    for r in sorted(summ, key=lambda r: r[_B]):
-        off_rows.append((r[_B], acc))
+    for r in summarize(u, F.sum(tok).alias("tsum")):
+        off_rows.append((r[BUCKET], acc))
         acc += int(r["tsum"] or 0)
-    offs = spark.createDataFrame(off_rows, f"{_B} long, __off long")
-
     w = (
-        Window.partitionBy(_B)
+        Window.partitionBy(BUCKET)
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        u.join(F.broadcast(offs), _B)
-        .select(
-            *[c for c in df.columns],
-            (F.sum(tok).over(w) - tok + F.col("__off")).alias("__tok_start"),
-        )
+    return attach(u, off_rows, {"__off": "long"}).select(
+        *df.columns,
+        (F.sum(tok).over(w) - tok + F.col("__off")).alias("__tok_start"),
     )
 
 

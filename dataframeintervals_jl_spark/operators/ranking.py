@@ -7,10 +7,8 @@ through ONE task (``WindowExec: No Partition Defined``) — at web-corpus
 scale the vocabulary is hundreds of millions of rows (typos, URLs,
 code), so that window is the straggler that kills the job.
 
-This module decomposes the rank into three fully parallel pieces, the
-same prefix-offset structure as ``pack_sequences``' bucketed global
-cumsum (operators/packing.py) and the keyless as-of fill
-(operators/asof_join.py):
+This module decomposes the rank into three fully parallel pieces,
+built on the bucket prefix offsets of :mod:`.range_buckets`:
 
 ``rank(t) = base(count_t) + prefix(count_t, bucket_t) + rn(t) - 1``
 
@@ -45,9 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import driver_count, driver_row, driver_rows
+from ..session import driver_count, driver_row
+from .range_buckets import BUCKET, attach, bucket_count, bucketize, summarize
 
-_LB = "__dfi_rank_lb"  # log2(count) bucket
 _PB = "__dfi_rank_pb"  # tie-column 2-char prefix bucket
 
 
@@ -85,28 +83,21 @@ def frequency_rank(
         df.storageLevel.useDisk is False
     ):
         df = df.localCheckpoint(eager=True)
-    spark = df.sparkSession
     cnt = F.col(count_col).cast("long")
 
     # -- base(c): terms in strictly-greater count groups -----------------
     g = df.groupBy(count_col).agg(F.count(F.lit(1)).alias("__gn"))
-    g = g.withColumn(_LB, F.floor(F.log2(cnt)).cast("long"))
-    bucket_tot = driver_rows(g.groupBy(_LB).agg(F.sum("__gn").alias("__bt")))
-    if not bucket_tot:
-        return df.select(
-            "*", F.lit(0).cast("long").alias(rank_col)
-        ).limit(0)
+    g = g.withColumn(BUCKET, F.floor(F.log2(cnt)).cast("long"))
     rows, acc = [], 0
-    for r in sorted(bucket_tot, key=lambda r: -r[_LB]):
-        rows.append((r[_LB], acc))
+    for r in reversed(summarize(g, F.sum("__gn").alias("__bt"))):
+        rows.append((r[BUCKET], acc))
         acc += int(r["__bt"])
-    boffs = spark.createDataFrame(rows, f"{_LB} long, __boff long")
     wb = (
-        Window.partitionBy(_LB)
+        Window.partitionBy(BUCKET)
         .orderBy(cnt.desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    base = g.join(F.broadcast(boffs), _LB).select(
+    base = attach(g, rows, {"__boff": "long"}).select(
         count_col,
         (F.sum("__gn").over(wb) - F.col("__gn") + F.col("__boff")).alias(
             "__base"
@@ -152,7 +143,6 @@ def global_order_rank(
     tie_col: str,
     rank_col: str = "rank",
     descending: bool = False,
-    buckets_per_core: int = 4,
     strategy: str = "range",
 ) -> DataFrame:
     """Append ``rank_col``: the 0-based position of every row under
@@ -187,83 +177,56 @@ def global_order_rank(
     """
     if rank_col in df.columns:
         raise ValueError(f"rank_col {rank_col!r} already exists")
-    spark = df.sparkSession
     v = F.col(value_col).cast("long")
-    rng = driver_row(df.agg(F.min(v).alias("lo"), F.max(v).alias("hi")))
-    if rng["lo"] is None:
-        return df.select(
-            "*", F.lit(0).cast("long").alias(rank_col)
-        ).limit(0)
-    lo, hi = int(rng["lo"]), int(rng["hi"])
-    nb = max(int(spark.sparkContext.defaultParallelism), 1) * int(
-        buckets_per_core
-    )
     if strategy == "range":
-        width = max((hi - lo) // nb + 1, 1)
-        # integer div (values may be epoch-ns scale — no double quotient)
-        b = df.withColumn(
-            "__gor_b",
-            F.expr(f"(CAST({value_col} AS BIGINT) - {lo}) div {width}"),
-        )
+        b = bucketize(df, v)
     elif strategy == "equidepth":
         from .quantile_windows import exact_quantile_longs
 
+        rng = driver_row(df.agg(F.min(v).alias("lo"), F.max(v).alias("hi")))
         total = driver_count(df)
-        ranks = sorted(
-            {max(1, (j * total) // nb) for j in range(1, nb)}
-        )
-        bounds = (
-            sorted(
-                set(
-                    exact_quantile_longs(
-                        df.select(F.col(value_col).cast("long")
-                                  .alias(value_col)),
-                        value_col, ranks, lo, hi, total,
-                    )
+        nb = bucket_count(df.sparkSession)
+        ranks = sorted({max(1, (j * total) // nb) for j in range(1, nb)})
+        bounds = sorted(
+            set(
+                exact_quantile_longs(
+                    df.select(v.alias(value_col)),
+                    value_col,
+                    ranks if total else [],
+                    rng["lo"],
+                    rng["hi"],
+                    total,
                 )
             )
-            if ranks
-            else []
         )
         # bucket = #boundaries strictly below v: equal values always
         # agree, so cross-bucket order stays total.  Plain additive
         # CASE chain (a higher-order aggregate() lambda here trips a
         # Catalyst binding error once the column flows through the
         # offsets join).
-        if bounds:
-            terms = " + ".join(
-                f"(CASE WHEN {bv}L < CAST({value_col} AS BIGINT)"
-                f" THEN 1L ELSE 0L END)"
-                for bv in bounds
-            )
-            bexpr = F.expr(terms)
-        else:
-            bexpr = F.lit(0).cast("long")
-        b = df.withColumn("__gor_b", bexpr)
+        terms = [F.when(F.lit(bv) < v, 1).otherwise(0) for bv in bounds]
+        b = df.withColumn(BUCKET, sum(terms, F.lit(0)).cast("long"))
     else:
         raise ValueError(
             f"strategy must be 'range' or 'equidepth', got {strategy!r}"
         )
-    counts = driver_rows(
-        b.groupBy("__gor_b").agg(F.count(F.lit(1)).alias("__n"))
-    )
-    acc, offs = 0, []
-    for r in sorted(counts, key=lambda r: r["__gor_b"], reverse=descending):
-        offs.append((int(r["__gor_b"]), acc))
+    offs, acc = [], 0
+    summ = summarize(b, F.count(F.lit(1)).alias("__n"))
+    for r in reversed(summ) if descending else summ:
+        offs.append((r[BUCKET], acc))
         acc += int(r["__n"])
-    odf = spark.createDataFrame(offs, "__gor_b long, __gor_off long")
     order = [
         F.col(value_col).desc() if descending else F.col(value_col).asc(),
         F.col(tie_col).asc(),
     ]
-    w = Window.partitionBy("__gor_b").orderBy(*order)
+    w = Window.partitionBy(BUCKET).orderBy(*order)
     return (
-        b.join(F.broadcast(odf), "__gor_b")
+        attach(b, offs, {"__gor_off": "long"})
         .withColumn(
             rank_col,
             (F.row_number().over(w) - 1 + F.col("__gor_off")).cast("long"),
         )
-        .drop("__gor_b", "__gor_off")
+        .drop(BUCKET, "__gor_off")
     )
 
 

@@ -25,8 +25,9 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import driver_row, driver_rows
+from ..session import driver_row
 from .asof_join import asof_join
+from .range_buckets import BUCKET, attach, bucketize, summarize
 
 Key = Union[str, Sequence[str], None]
 
@@ -190,10 +191,8 @@ def validity_intervals(
     same per-key sort (Spark reuses the sort), no joins — the standard
     temporal-table build at any key cardinality.  With NO key a naive
     keyless window would funnel the whole stream through one task, so
-    the global case range-buckets rows by time and repairs bucket
-    boundaries with two O(buckets) driver summaries (the same
-    structure as the keyless as-of join, asof_join.py) — every heavy
-    stage stays parallel."""
+    the global case range-buckets rows by time
+    (:mod:`.range_buckets`) — every heavy stage stays parallel."""
     keys = _by_cols(by)
     if not keys:
         return _validity_intervals_global(df, attrs, on, order)
@@ -218,24 +217,21 @@ def _validity_intervals_global(
 ) -> DataFrame:
     """Keyless SCD2 without a single-partition window.
 
-    Range-bucket rows by ``on`` (bucket ids from one min/max agg), then:
+    Range-bucket rows by ``on`` (:mod:`.range_buckets`), then:
 
     1. change detection — ``lag`` runs inside each bucket; the first
        row of a bucket compares against the LAST attrs of the previous
-       non-empty bucket (per-bucket ``max_by`` summary, O(buckets)
-       rows collected and broadcast back);
+       non-empty bucket (per-bucket ``max_by`` summary);
     2. ``valid_to`` — ``lead`` over run starts inside each bucket; the
        last run of a bucket closes at the FIRST run start of the next
-       bucket that has one (second O(buckets) summary, scanned on the
-       driver in descending bucket order).
+       bucket that has one (second summary, folded in descending
+       bucket order).
 
     The run-start table is localCheckpoint'ed between the two passes so
     the change-detection join is not recomputed for the summary.  The
     bucket id derives from ``on`` alone, so equal timestamps always
     share a bucket and the tie-break ``order`` never crosses a
     boundary."""
-    b, tsl = "__dfi_vi_bucket", "__dfi_vi_tsl"
-    spark = df.sparkSession
     # bucket ids need integer arithmetic; derive the ordinal by DOMAIN
     # (date would fail a bare long cast, timestamp would truncate to
     # SECONDS — fine for a monotonic bucket id but NOT for ordering)
@@ -243,89 +239,43 @@ def _validity_intervals_global(
     if on_dt in ("date", "timestamp", "timestamp_ntz"):
         from ..functions.spans import endpoint_to_ordinal
 
-        oc = endpoint_to_ordinal(F.col(on), on_dt)
+        u = bucketize(df, endpoint_to_ordinal(F.col(on), on_dt))
     else:
-        oc = F.col(on).cast("long")
-    bounds = driver_row(
-        df.agg(F.min(oc).alias("lo"), F.max(oc).alias("hi"))
-    )
-    lo = bounds["lo"]
-    if lo is None:  # empty input — emit the output schema, zero rows
-        return df.select(
-            *attrs,
-            F.col(on).alias("valid_from"),
-            F.col(on).alias("valid_to"),
-        ).limit(0)
-    nb = max(int(spark.sparkContext.defaultParallelism) * 4, 32)
-    width = max((int(bounds["hi"]) - int(lo)) // nb + 1, 1)
-    u = df.withColumn(tsl, oc - F.lit(int(lo))).withColumn(
-        b, F.expr(f"{tsl} DIV {width}")
-    )
+        u = bucketize(df, F.col(on))
 
     cur = F.struct(*[F.col(a) for a in attrs])
     # order by the RAW on column (exact — the ordinal may be coarser,
     # e.g. µs for ns-resolution longs would never be, but a timestamp's
     # long-cast is seconds), tiebroken exactly like the window sort
     scan_pos = F.struct(F.col(on), *[F.col(c) for c in order])
-    summ = driver_rows(
-        u.groupBy(b).agg(F.max_by(cur, scan_pos).alias("__last_attrs"))
-    )
-    attrs_type = df.select(cur.alias("s")).schema["s"].dataType
     inc_rows, prev_attrs = [], None
-    for r in sorted(summ, key=lambda r: r[b]):
-        inc_rows.append((r[b], prev_attrs))
+    for r in summarize(u, F.max_by(cur, scan_pos).alias("__last_attrs")):
+        inc_rows.append((r[BUCKET], prev_attrs))
         prev_attrs = r["__last_attrs"]
-    from pyspark.sql.types import LongType, StructField, StructType
+    attrs_type = df.select(cur.alias("s")).schema["s"].dataType
 
-    incoming = spark.createDataFrame(
-        inc_rows,
-        StructType(
-            [
-                StructField(b, LongType(), False),
-                StructField("__inc", attrs_type, True),
-            ]
-        ),
-    )
-
-    wb = Window.partitionBy(b).orderBy(on, *order)
+    wb = Window.partitionBy(BUCKET).orderBy(on, *order)
     prev_any = F.coalesce(F.lag(cur).over(wb), F.col("__inc"))
     changed = prev_any.isNull() | ~prev_any.eqNullSafe(cur)
     runs = (
-        u.join(F.broadcast(incoming), b)
+        attach(u, inc_rows, {"__inc": attrs_type})
         .withColumn("__dfi_chg", changed)
         .filter(F.col("__dfi_chg"))
-        .select(b, *attrs, F.col(on).alias("valid_from"), *order)
+        .select(BUCKET, *attrs, F.col(on).alias("valid_from"), *order)
         .localCheckpoint()  # reused by the summary AND the final pass
     )
 
-    nxt = driver_rows(
-        runs.groupBy(b).agg(F.min("valid_from").alias("__first_vf"))
-    )
-    on_type = runs.schema["valid_from"].dataType
     nxt_rows, nxt_vf = [], None
-    for r in sorted(nxt, key=lambda r: -r[b]):
-        nxt_rows.append((r[b], nxt_vf))
+    for r in reversed(summarize(runs, F.min("valid_from").alias("__first_vf"))):
+        nxt_rows.append((r[BUCKET], nxt_vf))
         nxt_vf = r["__first_vf"]
-    nextdf = spark.createDataFrame(
-        nxt_rows,
-        StructType(
-            [
-                StructField(b, LongType(), False),
-                StructField("__nxt", on_type, True),
-            ]
-        ),
-    )
 
-    wl = Window.partitionBy(b).orderBy("valid_from", *order)
-    return (
-        runs.join(F.broadcast(nextdf), b)
-        .select(
-            *attrs,
-            "valid_from",
-            F.coalesce(
-                F.lead("valid_from").over(wl), F.col("__nxt")
-            ).alias("valid_to"),
-        )
+    wl = Window.partitionBy(BUCKET).orderBy("valid_from", *order)
+    on_type = runs.schema["valid_from"].dataType
+    return attach(runs, nxt_rows, {"__nxt": on_type}).select(
+        *attrs,
+        "valid_from",
+        F.coalesce(F.lead("valid_from").over(wl), F.col("__nxt")).alias("valid_to"),
     )
 
 

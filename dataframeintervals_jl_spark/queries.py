@@ -3254,31 +3254,10 @@ def q_similarity_lsh_maintained(spark, sf_dir):
     write_lsh_index(
         emb.filter(third == 0), path, dim=64, n_planes=8, n_tables=4
     )
-    # The two append segments are independent jobs writing disjoint
-    # epoch directories (each hashes its own batch against the base
-    # meta, with its own internal cache), so submit them from driver
-    # threads and let the second segment's tasks back-fill the first's
-    # stragglers (guide §2.6).  foreachBatch maintenance arrives
-    # serially in production — this parallelism is the batch-replay
-    # case (N segments to catch up), where it is exactly the
-    # independent-jobs overlap the guide prescribes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f1 = _pool.submit(
-            inheritable_thread_target(
-                lambda: append_lsh_index(emb.filter(third == 1), path, 0)
-            )
-        )
-        _f2 = _pool.submit(
-            inheritable_thread_target(
-                lambda: append_lsh_index(emb.filter(third == 2), path, 1)
-            )
-        )
-        _f1.result()
-        _f2.result()
+    # the two append segments, one after the other (foreachBatch
+    # maintenance arrives serially too)
+    append_lsh_index(emb.filter(third == 1), path, 0)
+    append_lsh_index(emb.filter(third == 2), path, 1)
     out = lsh_rerank_topk_indexed(spark, path, queries, k=5, probe_radius=3)
     return out.select(
         "q_id", F.col("rank").cast("long").alias("rank"), "n_id", "score"
@@ -6807,11 +6786,12 @@ def q_masked_twa(spark, sf_dir):
     sf0.001/0.01/0.1 — non-degenerate everywhere.)  clamp_at pins
     the open-run horizon to the ORIGINAL windows' max stop (a tail
     mask would otherwise shift the fragment max).  The fragment set is
-    eagerly localCheckpoint'ed: it derives from a scan+join pipeline
-    that every downstream reference (horizon agg, join-strategy
-    probes) would otherwise replay — the round-10 plan carried 11
-    Window passes for exactly this reason; materialized, the executed
-    plan holds 3.  The windows table itself needs no checkpoint since
+    localCheckpoint'ed (lazily — the first probe on it materializes
+    it): it derives from a scan+join pipeline that every downstream
+    reference (horizon agg, join-strategy probes) would otherwise
+    replay — the round-10 plan carried 11 Window passes for exactly
+    this reason; materialized, the executed plan holds 3.  The windows
+    table itself needs no checkpoint since
     _es_windows computes its bounds driver-side (round 11) — it is a
     pure ``spark.range(16)`` projection.
     The oracle replays it by inclusion-exclusion over merged mask

@@ -106,10 +106,14 @@ def test_one_row_per_left_even_with_right_dupes(spark):
 
 
 def _brute_asof(lefts, rights, direction="backward", tolerance=None):
-    """Reference: for each left ts, nearest right (ts, val)."""
+    """Reference: for each left ts, nearest right (ts, val); a NULL ts
+    on either side matches nothing."""
     out = {}
+    rights = [r for r in rights if r[0] is not None]
     for i, lt in lefts:
-        if direction == "backward":
+        if lt is None:
+            best = None
+        elif direction == "backward":
             cand = [r for r in rights if r[0] <= lt]
             best = max(cand, key=lambda r: r[0]) if cand else None
         elif direction == "forward":
@@ -139,14 +143,23 @@ def _brute_asof(lefts, rights, direction="backward", tolerance=None):
 def test_global_asof_bucketed_matches_brute_force(spark, direction):
     """The no-`by` path (range-bucketed two-pass carry) must agree with
     brute force across many bucket boundaries, including buckets with no
-    right rows (carry must cross several empty buckets)."""
-    lefts = [(i, i * 97 % 5000) for i in range(400)]
+    right rows (carry must cross several empty buckets), and with the
+    keyed path on one constant key — NULL times on both sides included
+    (they land in the NULL bucket and match nothing)."""
+    lefts = [(i, i * 97 % 5000) for i in range(400)] + [(400, None)]
     rights = [(j * 61 % 5000, float(j)) for j in range(0, 120)]
     rights = [r for r in rights if r[0] % 7 != 0]  # gaps
+    rights.append((None, -1.0))
     left = spark.createDataFrame(lefts, "id long, ts long").repartition(8)
     right = spark.createDataFrame(rights, "ts long, val double").repartition(8)
     got = _rows(asof_join(left, right, on="ts", direction=direction))
     assert got == _brute_asof(lefts, rights, direction)
+    one_key = F.lit(0).alias("k")
+    keyed = asof_join(
+        left.select("*", one_key), right.select("*", one_key),
+        on="ts", by="k", direction=direction,
+    )
+    assert _rows(keyed) == got
 
 
 def test_global_asof_tolerance(spark):

@@ -38,9 +38,12 @@ def _expected_layout(rows, budget):
 def test_pack_sequences_global_matches_reference(spark, docs):
     rows = [(r.doc_id, r.lang, r.n_tokens) for r in docs.collect()]
     exp = _expected_layout(rows, 100)
+    # a NULL order key must not shift the layout of the other documents
+    null_doc = spark.createDataFrame([(None, "en", 7)], docs.schema)
     got = {
         r["doc_id"]: (r["chunk_id"], r["chunk_offset"])
-        for r in pack_sequences(docs, budget=100).collect()
+        for r in pack_sequences(docs.unionByName(null_doc), budget=100).collect()
+        if r["doc_id"] is not None
     }
     assert got == exp
 
