@@ -74,7 +74,8 @@ def merge_spans(
     Output: ``by`` columns + ``spancol`` (the island) + ``n_spans``
     (inputs merged into it).  ``merge_touching=True`` (default) also
     merges exactly-adjacent spans ``[a,b) + [b,c) -> [a,c)``;
-    ``False`` keeps them separate (strict-overlap islands).
+    ``False`` keeps them separate (strict-overlap islands).  Spans with
+    a NULL start have no place in the order and are dropped.
 
     Generic over endpoint domains: date/timestamp span columns merge on
     exact integer ordinals and return islands in the input domain.
@@ -87,6 +88,7 @@ def merge_spans(
     by_cols = _by_cols(by)
     start = F.col(spancol).getField("start")
     stop = F.col(spancol).getField("stop")
+    df = df.filter(start.isNotNull())
 
     if by_cols:
         w = Window.partitionBy(*by_cols).orderBy(start, stop)
@@ -225,7 +227,8 @@ def overlap_profile(
     """Sweep-line concurrency profile: disjoint segments ``[seg_start,
     seg_stop)`` with ``depth`` = number of input spans covering every
     point of the segment (per key).  Only covered segments (depth >= 1)
-    are emitted — the depth-0 regions are :func:`span_gaps`.
+    are emitted — the depth-0 regions are :func:`span_gaps`.  Spans
+    with a NULL start or stop cover nothing and are dropped.
 
     Execution: each span contributes boundary events ``(start, +1)``
     and ``(stop, -1)``; a groupBy collapses coincident boundaries
@@ -243,7 +246,7 @@ def overlap_profile(
     by_cols = _by_cols(by)
     start = F.col(spancol).getField("start")
     stop = F.col(spancol).getField("stop")
-    pts = df.select(
+    pts = df.filter(start.isNotNull() & stop.isNotNull()).select(
         *by_cols,
         F.explode(
             F.array(

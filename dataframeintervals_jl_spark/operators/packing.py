@@ -52,14 +52,18 @@ def pack_sequences(
     Documents longer than ``budget`` are allowed (they span chunks —
     chunk assignment is by first token, faithful to how GPT-style
     pipelines cut the concatenated stream).  ``order_col`` must be
-    unique per key or the layout is nondeterministic.
+    unique per key or the layout is nondeterministic.  A row whose
+    ``order_col`` is NULL is not placed: its two output columns are NULL
+    and it shifts no other row.
 
     Returns ``df`` + ``chunk_col`` + ``offset_col``.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
     by_cols = _by_cols(by)
-    tok = F.col(tokens_col).cast("long")
+    # a NULL order key has no place in the stream: it takes no tokens
+    # and its own start (cumsum - tok) comes out NULL
+    tok = F.when(F.col(order_col).isNotNull(), F.col(tokens_col).cast("long"))
 
     if by_cols:
         w = (

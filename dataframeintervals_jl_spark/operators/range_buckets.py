@@ -20,6 +20,9 @@ O(buckets) summary that is folded on the driver and broadcast back::
 Equal keys always share a bucket, so a per-bucket window sees every
 tie.  Rows whose key is NULL land in the NULL bucket, which the summary
 leaves out: they get no carried value, only their within-bucket result.
+Each caller gives a NULL key one meaning (row dropped, or a NULL
+result) and applies it in its keyed path too, so keyless and keyed
+agree on one constant key.
 """
 
 from __future__ import annotations

@@ -160,8 +160,9 @@ def global_order_rank(
     ``row_number()`` is a window PARTITIONED by bucket — every stage
     parallel, the sort spillable per bucket.
 
-    Requirements: ``value_col`` numeric non-null, ``tie_col`` unique
-    per row.  ``strategy``:
+    Requirements: ``value_col`` numeric, ``tie_col`` unique per row.
+    A NULL ``value_col`` gets a NULL rank and takes no place in the
+    order (NULL bucket, under either strategy).  ``strategy``:
 
     - ``'range'`` (default): equal-WIDTH buckets from one min/max agg
       — one pass, but a skewed value distribution concentrates rows
@@ -184,7 +185,7 @@ def global_order_rank(
         from .quantile_windows import exact_quantile_longs
 
         rng = driver_row(df.agg(F.min(v).alias("lo"), F.max(v).alias("hi")))
-        total = driver_count(df)
+        total = driver_count(df.filter(v.isNotNull()))
         nb = bucket_count(df.sparkSession)
         ranks = sorted({max(1, (j * total) // nb) for j in range(1, nb)})
         bounds = sorted(
@@ -205,7 +206,9 @@ def global_order_rank(
         # Catalyst binding error once the column flows through the
         # offsets join).
         terms = [F.when(F.lit(bv) < v, 1).otherwise(0) for bv in bounds]
-        b = df.withColumn(BUCKET, sum(terms, F.lit(0)).cast("long"))
+        b = df.withColumn(
+            BUCKET, F.when(v.isNotNull(), sum(terms, F.lit(0))).cast("long")
+        )
     else:
         raise ValueError(
             f"strategy must be 'range' or 'equidepth', got {strategy!r}"

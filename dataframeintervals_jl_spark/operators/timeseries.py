@@ -192,7 +192,10 @@ def validity_intervals(
     temporal-table build at any key cardinality.  With NO key a naive
     keyless window would funnel the whole stream through one task, so
     the global case range-buckets rows by time
-    (:mod:`.range_buckets`) — every heavy stage stays parallel."""
+    (:mod:`.range_buckets`) — every heavy stage stays parallel.
+
+    Events with a NULL ``on`` have no place in time and are dropped."""
+    df = df.filter(F.col(on).isNotNull())
     keys = _by_cols(by)
     if not keys:
         return _validity_intervals_global(df, attrs, on, order)

@@ -87,16 +87,21 @@ def spans_df(spark, spans_pdf):
 
 
 def make_span_df(spark, rows, extra=()):
-    """Tiny literal span table: rows = [(start, stop, *extra_vals)]."""
+    """Tiny literal span table: rows = [(start, stop, *extra_vals)].
+    ``(None, None)`` is a NULL span; one None endpoint is a NULL field."""
     fields = [T.StructField("span", SPAN_TYPE, True)] + [
         T.StructField(name, dtype, True) for name, dtype in extra
     ]
+
+    def _end(x):
+        return None if x is None else int(x)
+
     data = [
         tuple(
             [
                 None
-                if r[0] is None
-                else {"start": int(r[0]), "stop": int(r[1])}
+                if r[0] is None and r[1] is None
+                else {"start": _end(r[0]), "stop": _end(r[1])}
             ]
             + list(r[2:])
         )

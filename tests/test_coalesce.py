@@ -55,15 +55,22 @@ def test_keyed_merge_matches_brute_force(spark, merge_touching):
 
 @pytest.mark.parametrize("merge_touching", [True, False])
 def test_global_merge_matches_brute_force(spark, merge_touching):
-    # the NULL span lands in the NULL bucket: it must not disturb the
-    # islands of the other rows
-    df = make_span_df(spark, ROWS + [(None, None)]).repartition(8)
-    got = {
-        (r["span"]["start"], r["span"]["stop"], r["n_spans"])
-        for r in merge_spans(df, merge_touching=merge_touching).collect()
-        if r["span"] is not None and r["span"]["start"] is not None
-    }
+    # spans with a NULL start are dropped — they must not disturb the
+    # other islands, and keyless must equal keyed on one constant key
+    df = make_span_df(spark, ROWS + [(None, None), (None, 450)]).repartition(8)
+
+    def islands(out):
+        return {
+            (r["span"]["start"], r["span"]["stop"], r["n_spans"])
+            for r in out.collect()
+        }
+
+    got = islands(merge_spans(df, merge_touching=merge_touching))
     assert got == set(brute_merge(ROWS, merge_touching))
+    keyed = merge_spans(
+        df.withColumn("k", F.lit(0)), by="k", merge_touching=merge_touching
+    )
+    assert islands(keyed) == got
 
 
 def test_global_merge_single_giant_island(spark):
@@ -255,7 +262,12 @@ def test_overlap_profile_matches_brute_force(spark, seed):
         for k in range(3)
         for s in (rng.randrange(0, 500) for _ in range(40))
     ]
-    df = make_span_df(spark, rows, extra=[("k", LongType())])
+    # spans with a NULL endpoint cover nothing: dropped in both paths
+    df = make_span_df(
+        spark,
+        rows + [(None, 15, 0), (30, None, 1), (None, None, 2)],
+        extra=[("k", LongType())],
+    )
 
     got = sorted(
         (r["k"], r["span"]["start"], r["span"]["stop"], r["depth"])
@@ -273,6 +285,11 @@ def test_overlap_profile_matches_brute_force(spark, seed):
         for r in overlap_profile(df).collect()
     )
     assert got_g == brute_profile([(s, e) for s, e, _ in rows])
+    one_key = overlap_profile(df.withColumn("k", F.lit(0)), by="k")
+    assert sorted(
+        (r["span"]["start"], r["span"]["stop"], r["depth"])
+        for r in one_key.collect()
+    ) == got_g
 
 
 def test_overlap_profile_depth_conservation(spark):

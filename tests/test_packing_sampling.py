@@ -38,14 +38,20 @@ def _expected_layout(rows, budget):
 def test_pack_sequences_global_matches_reference(spark, docs):
     rows = [(r.doc_id, r.lang, r.n_tokens) for r in docs.collect()]
     exp = _expected_layout(rows, 100)
-    # a NULL order key must not shift the layout of the other documents
+    # a NULL order key is not placed and must not shift the layout of
+    # the other documents; keyless must equal keyed on one constant key
     null_doc = spark.createDataFrame([(None, "en", 7)], docs.schema)
-    got = {
-        r["doc_id"]: (r["chunk_id"], r["chunk_offset"])
-        for r in pack_sequences(docs.unionByName(null_doc), budget=100).collect()
-        if r["doc_id"] is not None
-    }
-    assert got == exp
+    df = docs.unionByName(null_doc)
+
+    def layout(out):
+        return {
+            r["doc_id"]: (r["chunk_id"], r["chunk_offset"]) for r in out.collect()
+        }
+
+    got = layout(pack_sequences(df, budget=100))
+    assert got == {**exp, None: (None, None)}
+    keyed = pack_sequences(df.withColumn("k", F.lit(0)), budget=100, by="k")
+    assert layout(keyed) == got
 
 
 def test_pack_sequences_keyed_matches_per_key_reference(spark, docs):

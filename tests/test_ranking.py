@@ -260,7 +260,8 @@ def test_global_order_rank_equidepth(spark):
     """The equi-depth strategy must produce identical ranks to the
     range strategy (and the plain order) on a Zipf-skewed column that
     concentrates the range buckets, must spread rows across many
-    buckets there, and must reject unknown strategies."""
+    buckets there, and must reject unknown strategies.  A NULL value
+    gets a NULL rank under both strategies and shifts no other rank."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -271,7 +272,8 @@ def test_global_order_rank_equidepth(spark):
     # skewed: most values tiny, a few huge (range-bucketing collapses)
     df = spark.range(600).select(
         F.col("id").alias("tie"),
-        F.when(F.col("id") % 50 == 0, F.col("id") * 10_000_000_000)
+        F.when(F.col("id") == 599, F.lit(None))
+        .when(F.col("id") % 50 == 0, F.col("id") * 10_000_000_000)
         .otherwise(F.col("id") % 7)
         .alias("v"),
     ).repartition(8)
@@ -286,8 +288,8 @@ def test_global_order_rank_equidepth(spark):
         ).collect()
     }
     assert a == e
-    order = sorted((r["v"], r["tie"]) for r in df.collect())
-    assert e == {t: i for i, (_, t) in enumerate(order)}
+    order = sorted((r["v"], r["tie"]) for r in df.collect() if r["v"] is not None)
+    assert e == {**{t: i for i, (_, t) in enumerate(order)}, 599: None}
 
     with _pytest.raises(ValueError, match="strategy"):
         global_order_rank(df, "v", "tie", strategy="nope")

@@ -357,7 +357,8 @@ def test_validity_intervals_null_attr_is_a_value(spark):
 def test_validity_intervals_global_matches_keyed_single_stream(spark):
     """Keyless (bucketed) path == naive global window semantics: run it
     on a stream long enough to span many buckets and compare against
-    the keyed path over a constant key (same total order)."""
+    the keyed path over a constant key (same total order).  An event
+    with a NULL time is dropped by both paths."""
     import random
 
     from pyspark.sql import functions as F
@@ -371,6 +372,7 @@ def test_validity_intervals_global_matches_keyed_single_stream(spark):
     for i in range(2000):
         # irregular timestamps incl. exact ties (order broken by eid)
         rows.append((i // 3 * 7, rng.choice("abc"), i))
+    rows.append((None, "z", 2000))
     df = spark.createDataFrame(rows, "ts long, attr string, eid long")
     out = validity_intervals(
         df, attrs=["attr"], on="ts", by=None, order=["eid"]
