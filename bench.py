@@ -335,8 +335,8 @@ def main() -> None:
     # the global selective join (binned wins; BNLJ is ~100x) and the
     # keyed self-join (hash/broadcast wins; forced binning pays an
     # explode for nothing).  Auto's probe cost (plan stats, counted
-    # stats, CMS registers when both sides are large) is INCLUDED in
-    # the timing — the comparison is end-to-end.
+    # stats, the exact per-key pair-work aggregate when both sides are
+    # large) is INCLUDED in the timing — the comparison is end-to-end.
     bench(
         "selective_auto",
         lambda: interval_join(

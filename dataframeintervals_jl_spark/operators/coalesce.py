@@ -33,6 +33,7 @@ from ..functions.spans import (
     span_from_ordinal,
     span_to_ordinal,
 )
+from .interval_join import _register_persisted
 from .range_buckets import BUCKET, attach, bucketize, summarize
 
 _PMAX = "__dfi_mrg_pmax"
@@ -79,6 +80,12 @@ def merge_spans(
 
     Generic over endpoint domains: date/timestamp span columns merge on
     exact integer ordinals and return islands in the input domain.
+
+    Cache note: the keyless path (``by=None``, also under
+    :func:`span_gaps`, :func:`span_complement` and
+    :func:`span_difference`) persists its island-flagged rows, which
+    the lazy result keeps reading.  After materializing the result,
+    call :func:`~.interval_join.release_join_caches` to free them.
     """
     df, _dom = _to_ordinal(df, spancol)
     if _dom is not None:
@@ -151,7 +158,9 @@ def _merge_spans_global(
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .alias(_ISL),
     )
-    flagged = flagged.persist()
+    # persisted: the offsets pass and the final grouping both read it;
+    # freed by release_join_caches()
+    flagged = _register_persisted(flagged.persist())
 
     # pass 2: island-number offsets = prefix sums of per-bucket breaks
     off_rows, acc = [], 0
@@ -663,12 +672,12 @@ def interval_agreement(
 
     Scale shape: two keyed island merges (one shuffle each); the
     intersection measure goes through :func:`~.interval_join.
-    interval_join_by` with SKETCH-DRIVEN strategy selection — a raw
-    key-equi join with the overlap as a residual filter would be
-    quadratic in islands-per-key (m·n pairs per key before the
-    filter); the auto planner keeps 'hash' only while the estimated
-    same-key pair work stays bounded and switches to the (keys, bin)
-    composite join otherwise.  Partial-agged sums; nothing
+    interval_join_by` with strategy selection from exact per-key pair
+    work, one aggregate — a raw key-equi join with the overlap as a
+    residual filter would be quadratic in islands-per-key (m·n pairs
+    per key before the filter); the auto planner keeps 'hash' only
+    while the same-key pair work stays bounded and switches to the
+    (keys, bin) composite join otherwise.  Partial-agged sums; nothing
     driver-side."""
     if not lo < hi:
         raise ValueError(f"need lo < hi, got [{lo}, {hi})")
@@ -772,8 +781,8 @@ def suppress_dominated_spans(
     cascade.
 
     Scale shape: the candidate pairs route through the engine's own
-    keyed interval join (``strategy='auto'``: sketch-driven
-    hash/binned/broadcast selection, same-key co-partitioning — no
+    keyed interval join (``strategy='auto'``: hash/binned/broadcast
+    selection from exact per-key pair work, same-key co-partitioning — no
     all-pairs), dominated ids collapse via partial-agged distinct, and
     survivors come from one LEFT ANTI equi-join on (keys, id).
     Nothing driver-side; no cartesian.

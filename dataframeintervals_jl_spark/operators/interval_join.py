@@ -938,11 +938,11 @@ def _estimate_bin_width(
     3.7s, the widened one 1.9s).
 
     An explicit ``key_factor`` overrides the HLL cardinality with the
-    sketch-planner's EFFECTIVE cardinality ``n_l·n_r / J`` (J = the
-    Count-Min pair-work estimate, :mod:`..plans.planner`): identical
-    to K for uniform keys, SMALLER under skew — so a hot key gets
-    narrower bins, which is exactly how a composite (key, bin) shuffle
-    key spreads skew."""
+    planner's EFFECTIVE cardinality ``n_l·n_r / J`` (J = the exact
+    per-key pair work, :mod:`..plans.planner`, whose profile also
+    supplies ``stats``): identical to K for uniform keys, SMALLER under
+    skew — so a hot key gets narrower bins, which is exactly how a
+    composite (key, bin) shuffle key spreads skew."""
     sl, sr = stats
     if not sl.n or not sr.n or sl.lo is None or sr.lo is None:
         return 1 if integral else 1.0
@@ -1036,11 +1036,13 @@ def _register_persisted(df: DataFrame) -> DataFrame:
 def release_join_caches(blocking: bool = False) -> int:
     """Unpersist every id-stamped input cached by outer binned interval
     joins (:func:`interval_join` / :func:`interval_join_by` with
-    ``keepleft``/``keepright``/full, and binned semi/anti joins).
+    ``keepleft``/``keepright``/full, and binned semi/anti joins), and
+    the island-flagged rows cached by keyless
+    :func:`~.coalesce.merge_spans`.
 
-    The caches exist for row-id stability between the matched pass and
-    the unmatched-recovery anti-join; they stay referenced by the
-    returned lazy DataFrames, so the engine cannot drop them itself.
+    The join caches exist for row-id stability between the matched pass
+    and the unmatched-recovery anti-join; all of them stay referenced by
+    the returned lazy DataFrames, so the engine cannot drop them itself.
     Call this AFTER materializing (collect/write) the join results —
     releasing earlier makes downstream actions silently recompute the
     id-stamped plans (wasted work, and recomputed ids are not
@@ -1272,14 +1274,14 @@ def interval_join_by(
     per-key row counts are too large for a per-key nested loop;
     keepleft/keepright/full recover unmatched rows via anti-joins on
     persisted row ids, same structure as the global binned path), or
-    'auto' — SKETCH-DRIVEN selection (:mod:`..plans.planner`): tiny
-    sides broadcast (plan stats, then counted stats); otherwise a
-    bounded Count-Min register pass per side estimates the same-key
-    pair work J = Σ_k n_l(k)·n_r(k) (the cms_join_size inner product)
-    and picks 'hash' while J stays within PAIR_WORK_FACTOR× the rows
-    shuffled, else 'binned' with the bin width informed by the
-    EFFECTIVE key cardinality n_l·n_r/J (uniform keys → K, skewed
-    keys → narrower bins).  A key predicted to own ≥50% of J emits a
+    'auto' — selection from exact per-key pair work, one aggregate
+    (:mod:`..plans.planner`): tiny sides broadcast (plan stats, then
+    counted stats); otherwise ONE grouped aggregate over both sides
+    computes the same-key pair work J = Σ_k n_l(k)·n_r(k) and picks
+    'hash' while J stays within PAIR_WORK_FACTOR× the rows shuffled,
+    else 'binned', its width from the same aggregate's side stats and
+    the EFFECTIVE key cardinality n_l·n_r/J (uniform keys → K, skewed
+    keys → narrower bins).  A key owning ≥50% of J emits a
     salt-or-warn advisory naming key_skew_report / AQE skew join.
 
     Like :func:`interval_join`, ``on`` spans with date / timestamp /
@@ -1370,7 +1372,6 @@ def interval_join_by(
         (True, True): "full_outer",
     }[(keepleft, keepright)]
 
-    auto_key_factor = None
     if strategy == "auto":
         from ..plans.planner import (
             choose_keyed_strategy,
@@ -1398,13 +1399,19 @@ def interval_join_by(
                     "broadcast_left" if cl <= cr else "broadcast_right"
                 )
             else:
-                prof = keyed_join_profile(lefts, rights, lk_final, rk_final)
+                prof = keyed_join_profile(
+                    lefts, rights, lk_final, rk_final,
+                    spans=None if kl_str else (sides.left_on, sides.right_on),
+                )
                 warn_if_hot_key(prof, "interval_join_by")
                 strategy = choose_keyed_strategy(prof)
                 if strategy == "binned" and kl_str:
                     strategy = "hash"  # string endpoints cannot bin
                 if strategy == "binned" and bin_width is None:
-                    auto_key_factor = prof.pair_key_factor
+                    bin_width = _estimate_bin_width(
+                        (prof.left, prof.right), integral,
+                        key_factor=prof.pair_key_factor,
+                    )
 
     if strategy in ("hash", "broadcast_right", "broadcast_left"):
         l_in, r_in = lefts, rights
@@ -1422,9 +1429,7 @@ def interval_join_by(
                 _SideStats(lefts, sides.left_on, key_cols=lk_final),
                 _SideStats(rights, sides.right_on, key_cols=rk_final),
             )
-            bin_width = _estimate_bin_width(
-                stats, integral, key_factor=auto_key_factor
-            )
+            bin_width = _estimate_bin_width(stats, integral)
         w = max(int(bin_width), 1) if integral else float(bin_width)
         # outer recovery needs stable row identities across the inner
         # pass and the anti-join — same persisted-id structure as the

@@ -3682,9 +3682,9 @@ def q_interval_join_by(spark, sf_dir):
 
 
 def q_interval_join_by_auto(spark, sf_dir):
-    """q_interval_join_by through the SKETCH-DRIVEN strategy='auto'
-    path (plans/planner.py): broadcast fast paths, then the Count-Min
-    pair-work estimate decides hash vs binned.  Shares the hash-path
+    """q_interval_join_by through the strategy='auto' path
+    (plans/planner.py): broadcast fast paths, then the exact per-key
+    pair work, one aggregate, decides hash vs binned.  Shares the hash-path
     oracle — whatever physical shape auto picks, the rows must be
     identical (the planner is an execution detail, never a semantics
     change)."""
@@ -9644,12 +9644,12 @@ def _sql_url_canonical_dedup() -> str:
                 WHEN scheme = 'https'
                 THEN regexp_replace(hostport, ':443$', '')
                 ELSE hostport END,
-           '^www\.', '') AS host,
+           '^www\\.', '') AS host,
          regexp_replace(regexp_extract(rest, '^([^?]*)', 1), '/+$', '')
            AS path,
          coalesce(array_to_string(
            list_filter(string_split(
-               regexp_extract(rest, '\?(.*)$', 1), '&'),
+               regexp_extract(rest, '\\?(.*)$', 1), '&'),
              p -> p <> ''
                   AND NOT regexp_matches(p, '{TRACKING_PARAM_RE}')),
            '&'), '') AS qs

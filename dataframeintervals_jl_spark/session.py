@@ -15,8 +15,12 @@ Centralizes the settings every entry point needs:
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
+
+#: Serializes :func:`driver_rows`' session-wide AQE flip across threads.
+_AQE_FLIP_LOCK = threading.Lock()
 
 
 def get_spark(app_name: str = "dataframeintervals_spark", cpus: int | None = None) -> SparkSession:
@@ -75,17 +79,22 @@ def driver_rows(df):
     NOT for wide results: without AQE a grouped aggregate keeps all
     ``spark.sql.shuffle.partitions`` reduce tasks in the collecting
     job, so call this only where the result is provably tiny (call
-    sites document their bounds).  The conf flip is session-scoped;
-    the engine issues these probes from the driver thread that is
-    building the query, never concurrently."""
+    sites document their bounds).  The conf flip is session-scoped, so
+    a module lock serializes flipping probes across threads: without
+    it, a thread could read another's "false" as the value to restore.
+    A session that already runs with AQE off collects without the
+    flip or the lock."""
     spark = df.sparkSession
     key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
+    if spark.conf.get(key).lower() == "false":
         return df.collect()
-    finally:
-        spark.conf.set(key, prev)
+    with _AQE_FLIP_LOCK:
+        prev = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "false")
+            return df.collect()
+        finally:
+            spark.conf.set(key, prev)
 
 
 def driver_row(df):

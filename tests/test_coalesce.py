@@ -83,6 +83,23 @@ def test_global_merge_single_giant_island(spark):
     assert out[0]["n_spans"] == 500
 
 
+def test_global_merge_cache_freed_by_release(spark):
+    """Keyless merge_spans persists its flagged rows; release_join_caches
+    frees them, so no cached RDD outlives the materialized result."""
+    from dataframeintervals_jl_spark import release_join_caches
+
+    def cached():
+        jsc = spark.sparkContext._jsc.sc()
+        return {r.id() for r in jsc.getRDDStorageInfo()}
+
+    release_join_caches(blocking=True)
+    before = cached()
+    assert len(merge_spans(make_span_df(spark, ROWS)).collect()) > 0
+    assert cached() - before
+    release_join_caches(blocking=True)
+    assert cached() - before == set()
+
+
 def test_global_merge_no_single_partition_exchange(spark):
     from dataframeintervals_jl_spark.plans import simple_plan
 

@@ -688,6 +688,49 @@ def test_no_duplicate_catalog_names_in_source():
     assert len(registry_keys) == qmod.EXPECTED_CATALOG_SIZE
 
 
+def test_package_compiles_without_warnings():
+    """Every module compiles with SyntaxWarning / DeprecationWarning
+    raised as errors — an invalid escape such as ``'\\.'`` in a plain
+    or f-string is a warning today and an error in later Pythons."""
+    import pathlib
+    import warnings
+
+    import dataframeintervals_jl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    paths = sorted(root.rglob("*.py"))
+    assert len(paths) > 20
+    for path in paths:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", SyntaxWarning)
+            warnings.simplefilter("error", DeprecationWarning)
+            compile(path.read_text(), str(path), "exec")
+
+
+def test_driver_rows_keeps_aqe_conf_under_threads(spark):
+    """driver_rows flips AQE off for its one action; probes from two
+    threads at once must still leave the session conf as they found
+    it (an unserialized flip can restore another thread's "false")."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dataframeintervals_jl_spark.session import driver_rows
+
+    key = "spark.sql.adaptive.enabled"
+    found = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        df = spark.range(10).agg(F.sum("id"))
+
+        def probe(_):
+            return [driver_rows(df)[0][0] for _ in range(20)]
+
+        with ThreadPoolExecutor(2) as pool:
+            assert list(pool.map(probe, range(2))) == [[45] * 20] * 2
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, found)
+
+
 def test_auto_broadcast_pair_budget_guard(spark, monkeypatch):
     """Auto strategy must not hand two non-tiny sides to a
     BroadcastNestedLoopJoin just because the smaller one fits in

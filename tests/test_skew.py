@@ -104,10 +104,9 @@ def _spans_df(spark, rows):
 
 
 def test_keyed_join_profile_uniform_and_skewed(spark):
-    """The CMS planner profile: J matches the true same-key pair count
-    (within overestimate-only error), pair_key_factor recovers ~K for
-    uniform keys and collapses under skew, hot_share flags the
-    dominant key."""
+    """The planner profile: J is the true same-key pair count,
+    pair_key_factor recovers ~K for uniform keys and collapses under
+    skew, hot_share flags the dominant key."""
     from dataframeintervals_jl_spark.plans.planner import (
         KeyedJoinProfile,
         choose_keyed_strategy,
@@ -157,6 +156,49 @@ def test_keyed_join_profile_uniform_and_skewed(spark):
     assert len(rec) == 1 and "pair evaluations" in str(rec[0].message)
 
 
+def test_keyed_join_profile_matches_brute_force(spark):
+    """J, H, the non-NULL-key counts and both sides' span stats equal a
+    Python count over a two-column key with NULL keys (left out of J, H
+    and n_left/n_right, counted in the side stats) and a NULL span."""
+    from collections import Counter
+
+    from dataframeintervals_jl_spark.plans.planner import keyed_join_profile
+
+    schema = "a long, b string, sp struct<start: long, stop: long>"
+    lrows = [(k % 3, "xy"[k % 2], (10 * k, 10 * k + k % 7)) for k in range(40)]
+    lrows += [(None, "x", (5, 9)), (1, None, (-20, 3)), (2, "y", None)]
+    rrows = [(0, "x", (k, k + 3)) for k in range(25)]
+    rrows += [(k % 4, "y", (100 + k, 130 + 2 * k)) for k in range(30)]
+    rrows += [(None, None, (0, 1000))]
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(a, b, None if sp is None else {"start": sp[0], "stop": sp[1]})
+             for a, b, sp in rows],
+            schema,
+        )
+
+    p = keyed_join_profile(
+        frame(lrows), frame(rrows).withColumnRenamed("sp", "sp_r"),
+        ["a", "b"], ["a", "b"], spans=("sp", "sp_r"),
+    )
+
+    def keyed(rows):
+        return Counter((a, b) for a, b, _ in rows if None not in (a, b))
+
+    cl, cr = keyed(lrows), keyed(rrows)
+    pairs = [cl[k] * cr[k] for k in cl]
+    assert (p.n_left, p.n_right) == (sum(cl.values()), sum(cr.values()))
+    assert (p.join_rows_est, p.heavy_pair_est) == (sum(pairs), max(pairs))
+    for got, rows in ((p.left, lrows), (p.right, rrows)):
+        spans = [sp for _, _, sp in rows if sp is not None]
+        assert got.n == len(rows)
+        assert got.dur == pytest.approx(
+            sum(e - s for s, e in spans) / len(spans))
+        assert (got.lo, got.hi) == (min(s for s, _ in spans),
+                                    max(e for _, e in spans))
+
+
 def test_interval_join_by_auto_strategy(spark):
     """strategy='auto' end-to-end: a tiny side broadcasts; a
     high-cardinality join stays hash; a low-cardinality heavy join
@@ -192,12 +234,28 @@ def test_interval_join_by_auto_strategy(spark):
     )
 
 
+def _jobs_run(spark, build):
+    """(result of ``build()``, Spark jobs it ran before returning)."""
+    sc = spark.sparkContext
+    group = "dfi-test-planner-jobs"
+    sc.setJobGroup(group, "planner job count")
+    try:
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)) - before
+
+
 def test_interval_join_by_auto_cms_branch(spark, monkeypatch):
-    """Force the sketch branch (broadcast thresholds patched to 0/tiny)
-    and check both outcomes of the pair-work rule: high-cardinality
-    keys resolve to 'hash' (no bin column in the plan), low-cardinality
-    heavy keys resolve to 'binned' (bin equi-key present), and both
-    return exactly the explicit-strategy rows."""
+    """Force the planner branch (broadcast thresholds patched to
+    0/tiny) and check both outcomes of the pair-work rule:
+    high-cardinality keys resolve to 'hash' (no bin column in the
+    plan), low-cardinality heavy keys resolve to 'binned' (bin equi-key
+    present), and both return exactly the explicit-strategy rows.
+    Planning two large sides runs 3 jobs (two counts, one profile
+    aggregate that also feeds the bin width); a small side, 2."""
     from dataframeintervals_jl_spark import interval_join_by
     from dataframeintervals_jl_spark.operators import interval_join as ij
     from dataframeintervals_jl_spark.plans import simple_plan
@@ -211,9 +269,10 @@ def test_interval_join_by_auto_cms_branch(spark, monkeypatch):
         [(k, 10 * r, 10 * r + 15) for k in range(300) for r in range(4)],
     )
     hi2 = hi.withColumnRenamed("rid", "rid_r")
-    auto_hi = interval_join_by(
+    auto_hi, jobs = _jobs_run(spark, lambda: interval_join_by(
         hi, hi2, by="k", strategy="auto", validate="skip"
-    )
+    ))
+    assert jobs == 3
     assert "__dfi_bin" not in simple_plan(auto_hi)
     assert sorted(map(tuple, auto_hi.collect())) == sorted(
         map(tuple, interval_join_by(
@@ -227,12 +286,20 @@ def test_interval_join_by_auto_cms_branch(spark, monkeypatch):
         [(k, 10 * r, 10 * r + 15) for k in range(2) for r in range(600)],
     )
     lo2 = lo.withColumnRenamed("rid", "rid_r")
-    auto_lo = interval_join_by(
+    auto_lo, jobs = _jobs_run(spark, lambda: interval_join_by(
         lo, lo2, by="k", strategy="auto", validate="skip"
-    )
+    ))
+    assert jobs == 3
     assert "__dfi_bin" in simple_plan(auto_lo)
     assert sorted(map(tuple, auto_lo.collect())) == sorted(
         map(tuple, interval_join_by(
             lo, lo2, by="k", strategy="hash", validate="skip"
         ).collect())
     )
+
+    monkeypatch.setattr(ij, "AUTO_BROADCAST_ROWS", 100_000)
+    small, jobs = _jobs_run(spark, lambda: interval_join_by(
+        hi, lo2, by="k", strategy="auto", validate="skip"
+    ))
+    assert jobs == 2
+    assert "Broadcast" in simple_plan(small)
